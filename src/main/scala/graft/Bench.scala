@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark entry: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":…,"queries":{…}}. Queries run in sorted
+/** Benchmark entry: runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
+  * writes {"metric":…,"queries":{…}} to BENCH.json (or
+  * SPARK_GRAFT_BENCH_OUT) and prints a compact summary of it — total,
+  * passes, n_queries, the crashed queries in `errors`, calibration, load
+  * and `queries_file` — as the last stdout line, at most
+  * [[MaxSummaryChars]] long. Queries run in sorted
   * name order so timings are comparable across rounds. Set
   * SPARK_GRAFT_BENCH_PASSES=2 to run a second timed pass (the reported
   * number is the minimum per query — steady-state, warmup excluded).
@@ -55,6 +59,9 @@ object Bench {
     val calibFirst = calib()
 
     var results = Map.empty[String, Double]
+    // a crashed query is an ERROR, never a time: it leaves `results` and
+    // the total and is named in the summary line's `errors` list
+    var errors = Vector.empty[String]
     for (pass <- 1 to passes; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -63,47 +70,60 @@ object Bench {
       // run's staging disk bounded by ONE query's pins (not the whole
       // suite × passes) without ever racing another unit of work
       val scope = graft.store.Stage.open()
-      try { fn(spark, sfDir).count() } catch {
+      val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable =>
-          // loud marker: a crashing query must not pass as a fast time
-          // (correctness is gated separately by Verify; this keeps the
-          // bench log self-honest)
           System.err.println(s"[bench ERROR] $name ${e.getClass.getName}: " +
             String.valueOf(e.getMessage).take(200))
+          false
       }
       val sec = (System.nanoTime() - t0) / 1e9
       graft.store.Stage.clear(spark, scope) // untimed: boundary hygiene
-      System.err.println(f"[bench pass$pass] $name $sec%.2fs")
+      System.err.println(s"[bench pass$pass] $name ${f3(sec)}s")
+      if (!ok && !errors.contains(name)) errors :+= name
       results += (name -> math.min(sec, results.getOrElse(name, Double.MaxValue)))
     }
+    results --= errors
 
     val calibLast = calib()
     val loadEnd = loadAvg
-    // 3-decimal seconds (1 ms resolution — well under the suite's run
-    // noise): r15/r16 both lost the driver's per-query comparison because
-    // the 143-query line at full double precision (~4.6 KB) overflowed the
-    // ~4 KB stdout tail the driver stores — the stored tail began
-    // mid-JSON and the parse failed (PERF_r16 per_query empty). At 3
-    // decimals the line is ~3.7 KB and fits with sbt's trailer.
-    def f3(d: Double): String = f"$d%.3f"
-    val qs = names.map(k => "\"" + k + "\":" + f3(results(k)))
-      .mkString("{", ",", "}")
+    val qs = results.toSeq.sortBy(_._1).map { case (k, v) =>
+      "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val total = results.values.sum
-    val json =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-        s""","calib_query":"$CalibQuery","calib_first_sec":${f3(calibFirst)}""" +
-        s""","calib_last_sec":${f3(calibLast)},"load_avg_start":${f3(loadStart)}""" +
-        s""","load_avg_end":${f3(loadEnd)}}"""
-    // persist to a file first: stdout tails get truncated (BENCH_r05 lost
-    // its per-query dict that way); the file is the artifact of record
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
+    def line(errs: Seq[String], more: String = ""): String =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
+        s""""passes":$passes,"n_queries":${names.size},""" +
+        s""""n_errors":${errors.size},""" +
+        errs.map("\"" + _ + "\"").mkString("\"errors\":[", ",", "],") +
+        s""""calib_query":"$CalibQuery",""" +
+        s""""calib_first_sec":${f3(calibFirst)},""" +
+        s""""calib_last_sec":${f3(calibLast)},""" +
+        s""""load_avg_start":${f3(loadStart)},""" +
+        s""""load_avg_end":${f3(loadEnd)},"queries_file":"$out"$more}"""
+    // the file is the artifact of record: the summary plus the per-query
+    // map, which a bounded stdout tail cannot hold (143 queries ≈ 3.7 KB)
+    val json = line(errors, s""","sf":"$sfDir","queries":$qs""")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))
+    // the last stdout line must fit a 2,000-char tail: at most 1.9 KB,
+    // so a long error list keeps only the names that fit (`n_errors`
+    // still counts them all)
+    val summary = errors.inits.map(line(_))
+      .find(_.length <= MaxSummaryChars).getOrElse(line(Nil))
     // stop Spark BEFORE printing so the JSON is the final repo-emitted
     // stdout line (only sbt's own [success] trailer can follow it), then
     // flush explicitly — the driver parses the line from a bounded tail
     spark.stop()
-    println(json)
+    println(summary)
     System.out.flush()
   }
+
+  /** Size cap of the final stdout line (a 2,000-char tail, with room). */
+  val MaxSummaryChars = 1900
+
+  /** Seconds at 1 ms resolution, locale-independent (a `f""` format
+    * follows the JVM default locale and can print a decimal comma).
+    */
+  def f3(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
+    Double.box(d))
 }

@@ -51,13 +51,16 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * Storage: an APPEND-ONLY hot store (S10 — the reference's temporary
   * store appends batches per metric while background goroutines flush,
   * `redis/temporarystore/redis.go:156-220`, `batch/batch.go:368-503`).
-  * Each write pins ONLY its own batch (`localCheckpoint`), so per-write
-  * cost is O(batch) — including the p99: the every-`compactEvery`-batches
-  * fold runs on a BACKGROUND thread over a copy-on-write snapshot prefix
-  * and is swapped in atomically, so no write ever waits on it.
-  * Last-write-wins conflict resolution moves to the read side (the
-  * verified O2 dedup shape). The durable path at scale is
-  * `store.Store.writePoints` (S8).
+  * Its whole state is ONE immutable [[graft.store.HotTier]] snapshot:
+  * every append, delta fold and full fold publishes a new value under
+  * the write lock, and every read takes its view — batches, stamps and
+  * the compacted-head flag together — with one load. Each write pins
+  * ONLY its own batch, so per-write cost is O(batch) — including the
+  * p99: the every-`compactEvery`-batches fold runs on a BACKGROUND
+  * thread over a snapshot prefix and swaps in copy-on-write, so no
+  * write ever waits on it. Last-write-wins conflict resolution moves to
+  * the read side (the verified O2 dedup shape). The durable path at
+  * scale is `store.Store.writePoints` (S8).
   *
   * Remote read streams: when the client negotiates
   * `STREAMED_XOR_CHUNKS`, series are XOR-chunk-encoded on the EXECUTORS
@@ -120,31 +123,22 @@ final class HttpApi(spark: SparkSession,
   val DefaultTtlSec: Long = 3155760000L
 
 
-  // hot store: append-only vector of per-write pinned batches, each
-  // (labels, metric_id, ts_ms, value, __seq, __ttl_sec). Element 0 may be
-  // a compacted fold (headCompacted) — compaction swaps a folded prefix
-  // COPY-ON-WRITE, so writes never wait on it (the reference's temp store
-  // appends while background goroutines flush, `batch/batch.go:368-503`).
-  @volatile private var batches: Vector[DataFrame] = Vector.empty
-  @volatile private var batchMins: Vector[Long] = Vector.empty // min ts_ms
-  @volatile private var headCompacted = false
-  // structural invariant: batches = [head?] ++ <midBatches mid folds> ++
-  // raw pin tail. Mids are produced by [[deltaFoldNow]]; the full fold
-  // collapses everything (head + mids + raws) and resets the count.
-  @volatile private var midBatches = 0
-  // pins since the last FULL fold — the compaction trigger. The vector
-  // length no longer measures it once delta folds shrink the tail.
-  @volatile private var pinsSinceFullFold = 0
-  // wall stamp per batch: every post acked at or before batchWallMs(i)
-  // is contained in batches(0..i) (FIFO flusher; the stamp is captured
-  // under `this` at flush-snapshot time). After a compaction swap,
-  // batchWallMs(0) is the stamp of the newest FOLDED batch — the instant
-  // the compacted head alone is a complete view of ([[readView]] tier 1).
-  @volatile private var batchWallMs: Vector[Long] = Vector.empty
+  // hot store: one immutable [[graft.store.HotTier]] — the append-only
+  // vector of per-write pinned batches (labels, metric_id, ts_ms, value,
+  // __seq, __ttl_sec), each with its min ts, completeness stamp and
+  // staged path, plus the fold counters and retire lists. Written ONLY
+  // under `this` (each transition is one reference swap); readers take
+  // their whole view with one volatile load. Folds swap a folded prefix
+  // COPY-ON-WRITE, so writes never wait on them (the reference's temp
+  // store appends while background goroutines flush,
+  // `batch/batch.go:368-503`).
+  @volatile private var hot =
+    graft.store.HotTier(pinnedThroughWallMs = System.currentTimeMillis())
   // Hot-batch pin medium. `localCheckpoint` stores UNREPLICATED blocks
-  // on one executor; BlockWhere demonstrated that killing the holder
-  // makes the batch unreadable (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) —
-  // and these rows were ACKNOWLEDGED to the remote-write client and
+  // on one executor; killing the holder makes the batch unreadable
+  // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, SCALE.md "Round-10: durable
+  // pipeline-boundary pins", r12 correction) — and these rows were
+  // ACKNOWLEDGED to the remote-write client and
   // released from driver memory, so there is NO recompute path: on a
   // real cluster that is silent-durability loss waiting for a node
   // failure. When `graft.stage.dir` is set (the cluster-deployment
@@ -160,21 +154,12 @@ final class HttpApi(spark: SparkSession,
   // deployments must set `graft.stage.dir`; the block-manager pin is a
   // short-session fast path, and that boundary is now measured, not
   // assumed (SCALE.md r13, SOAK_BENCH_hour_r13.json runs staged).
+  // Superseded staged paths retire with ONE FULL-fold generation of
+  // grace so in-flight readers finish their scans (the coldGen
+  // discipline; the two retire lists live in the HotTier).
   private val durableHot: Boolean =
     spark.conf.getOption("graft.stage.dir").isDefined
   private val hotScope = graft.store.Stage.detachedScope()
-  // staged path per batches[i] (parallel vector; "" = localCheckpoint).
-  // Superseded paths retire with ONE FULL-fold generation of grace so
-  // in-flight readers finish their scans (the coldGen discipline).
-  // Two lists (ADVICE r13): delta folds ACCUMULATE their retirees into
-  // the current generation and drop NOTHING — a single list overwritten
-  // per fold shrank a slow reader's grace window from ~compactEvery
-  // pins to ~deltaFoldEvery (8×) once delta folds ran between fulls.
-  // Each FULL fold deletes the previous generation's list and promotes
-  // the current one, so every retiree survives ≥ one full generation.
-  @volatile private var batchPaths: Vector[String] = Vector.empty
-  @volatile private var retiredPrevGen: Vector[String] = Vector.empty
-  @volatile private var retiredCurGen: Vector[String] = Vector.empty
 
   /** Pin one hot relation on the configured medium. */
   private def pinHot(df: DataFrame, tag: String): (DataFrame, String) =
@@ -601,21 +586,13 @@ final class HttpApi(spark: SparkSession,
     })
   @volatile private var lastFlush: java.util.concurrent.Future[_] =
     java.util.concurrent.CompletableFuture.completedFuture(null)
-  // flush snapshots submitted but not yet appended to `batches`
+  // flush snapshots submitted but not yet appended to the hot tier
   private val queuedFlushes = new java.util.concurrent.atomic.AtomicInteger(0)
   // backpressure bound: a flusher lagging this many snapshots behind
   // stalls the writer until a queue SLOT frees — bounded driver memory
   // (transient overshoot is ≤ one snapshot per concurrent writer: each
   // post appends, maybe submits, and only then waits for the slot)
   private val MaxQueuedFlushes = 16
-  // bounded-staleness reads: every post acked at or before this wall
-  // instant is PINNED (visible in `batches`). Advanced by the flusher
-  // when a snapshot's append lands (all earlier posts are in that or an
-  // earlier snapshot — the flusher is single-threaded FIFO) and by
-  // [[readView]] when it observes the fully-quiesced state
-  // under the lock. A failed pin re-prepends its snapshot and does NOT
-  // advance this, so the bound stays conservative.
-  @volatile private var pinnedThroughWallMs: Long = System.currentTimeMillis()
   // per-request read-staleness budget (ms), set from the
   // X-SquirrelDB-Max-Staleness header by [[handle]] on the handler
   // thread and removed in its finally; null = strict read-your-writes
@@ -741,7 +718,7 @@ final class HttpApi(spark: SparkSession,
     */
   private[graft] def drainFlushes(): Unit = flushPending()
 
-  /** The hot-batch view a read should scan, staleness-aware. Default
+  /** The hot-tier view a read should scan, staleness-aware. Default
     * (no header) is strict read-your-writes: drain the flush queue, then
     * serve everything. A read carrying `X-SquirrelDB-Max-Staleness: S`
     * (seconds) instead accepts any view that includes every sample
@@ -749,118 +726,67 @@ final class HttpApi(spark: SparkSession,
     * constraint, latency the objective; the same freshness/latency trade
     * as the reference's T6 read-side slack — `batch/batch.go:72-74,
     * 800-806` widens memory-store reads by `memoryOverreadMs` rather
-    * than forcing alignment):
+    * than forcing alignment). The horizon is pinned at ENTRY — staleness
+    * is measured from request arrival — and each pass serves, in order:
     *
-    *  1. the shortest batch PREFIX whose completeness stamp covers the
-    *     budget — with the head compacted every `compactEvery` pins and
-    *     the raw tail delta-folded every `deltaFoldEvery` pins (r13),
-    *     the typical hit is [head, a few mids]: bounded scan depth no
-    *     matter how hard the writers are pushing. (The r12 shape served
-    *     either the head ALONE or the FULL `compactEvery`-deep union;
-    *     its read p99 paid that deep union whenever the head stamp
-    *     missed the budget — the r12 soak measured 3.66 s p99 against a
-    *     248 ms p50 from exactly this cliff.)
-    *  2. the full pinned union, when even the newest batch stamp is too
-    *     old but [[pinnedThroughWallMs]] still covers the budget;
-    *  3. a budget-bounded drain ([[drainToBudget]], r16) — wait until
-    *     the oldest overdue snapshots pin, not until the whole backlog
-    *     does. The guarantee is real (every sample acked ≥ S ago is in
-    *     the served view) but a lapsed budget no longer pays for the
-    *     fresh tail: under a rewrite-window backlog the queue refills
-    *     while a full drain waits, and the r16 ceiling soak measured
-    *     those full drains at 50-160 s — most of it spent pinning data
-    *     the budget never asked for. Header-less reads still take the
-    *     strict whole-queue [[flushPending]] path.
+    *  1. everything, when the write side is fully quiesced under the
+    *     lock (everything acked is pinned NOW);
+    *  2. the shortest batch PREFIX whose completeness stamp covers the
+    *     horizon ([[graft.store.HotTier.covering]]) — with the head
+    *     compacted every `compactEvery` pins and the raw tail
+    *     delta-folded every `deltaFoldEvery` pins (r13), the typical hit
+    *     is [head, a few mids]: bounded scan depth no matter how hard
+    *     the writers are pushing (the r12 shape served either the head
+    *     ALONE or the FULL `compactEvery`-deep union, and the r12 soak
+    *     measured 3.66 s p99 against a 248 ms p50 from that cliff);
+    *     failing that, the full union when the tier's
+    *     `pinnedThroughWallMs` covers it.
+    *
+    * A pass that serves neither waits on the flusher and tries again —
+    * a budget-bounded drain (r16): coverage returns the moment the
+    * oldest OVERDUE snapshots pin, not when the whole backlog does. A
+    * whole-queue drain made the reader pay for the fresh tail too, and
+    * under a rewrite-window backlog the tail refills while the drain
+    * waits — the r16 ceiling soak (8 writers at ~150 k pts/s offered,
+    * cold rewrites co-located) measured those drains at 50-160 s. The
+    * entry horizon is covered at latest by the snapshot this read
+    * submits itself (its wall stamp is later than the horizon), so the
+    * loop ends after one overdue-prefix drain; a re-evaluated "now"
+    * would livelock under sustained refill. Each wait slice rides the
+    * in-flight flush future (`get` with a 50 ms timeout), so a pin
+    * failure surfaces to the reader exactly as [[flushPending]] would.
+    * Only the first pass (no drain) counts as a stale read.
     */
-  private def readView(): (Vector[DataFrame], Boolean) = {
+  private def readView(): graft.store.HotTier = {
     val budget = readStalenessMs.get
     if (budget == null || budget.longValue <= 0) {
-      flushPending(); return (batches, headCompacted)
+      flushPending(); return hot
     }
-    val (quiesced, bs, hc, walls, pinnedThrough) = synchronized {
-      val q = pending.isEmpty && queuedFlushes.get == 0
-      // fully quiesced under the lock ⇒ everything acked is pinned NOW
-      // (write() appends under `this`; queuedFlushes releases only after
-      // the snapshot's append or re-prepend)
-      if (q) pinnedThroughWallMs = System.currentTimeMillis()
-      // the stamp must be captured WITH the batch snapshot: a pin landing
-      // after this block advances pinnedThroughWallMs for the NEW
-      // `batches`, not for the `bs` captured here — checking the live
-      // volatile below would let tier 2 serve a snapshot missing rows
-      // acked longer ago than the budget (rows can sit in `pending` far
-      // longer than their snapshot's wall stamp suggests)
-      (q, batches, headCompacted, batchWallMs, pinnedThroughWallMs)
-    }
-    if (quiesced) return (bs, hc)
-    val now = System.currentTimeMillis()
-    // shortest PREFIX whose completeness stamp covers the budget:
-    // walls(i) stamps "every post acked at or before walls(i) is in
-    // batches[0..i]" (FIFO flusher), so any prefix is a consistent
-    // earlier view of the store and the stamps ascend — the first
-    // covering index is the cheapest adequate view. i == 0 with a
-    // compacted head is the original tier 1; with delta folds the
-    // typical hit is [head, a few mids], never the raw tail.
-    val i = walls.indexWhere(w => now - w <= budget.longValue)
-    if (i >= 0) {
-      staleReadsTotal.incrementAndGet()
-      if (i == 0 && hc) staleHeadReadsTotal.incrementAndGet()
-      (bs.take(i + 1), hc)
-    } else if (now - pinnedThrough <= budget.longValue) {
-      staleReadsTotal.incrementAndGet()
-      (bs, hc)
-    } else {
-      drainToBudget(budget.longValue)
-    }
-  }
-
-  /** Tier-3 drain, bounded by the staleness budget (r16): the flush
-    * queue is FIFO and the completeness stamps ascend, so coverage is
-    * restored the moment the oldest OVERDUE snapshots pin — not when
-    * the entire backlog does. The pre-r16 tier 3 called
-    * [[flushPending]] (wait for the LAST queued snapshot); under a
-    * rewrite-window backlog that makes the reader pay for the fresh
-    * tail too, and the tail keeps refilling while the drain waits —
-    * the r16 ceiling soak (8 writers at ~150 k pts/s offered, cold
-    * rewrites co-located) measured exactly those whole-queue drains as
-    * its 50-160 s read spikes. Waiting only to coverage serves the
-    * documented header contract ("any view that includes every sample
-    * acked ≥ S ago") at the cheapest point the contract admits.
-    *
-    * Each wait slice rides the in-flight flush future (`get` with a
-    * 50 ms timeout), so a pin failure surfaces to the reader exactly
-    * as `flushPending().get()` would, and a completed future triggers
-    * re-submission of whatever buffered since — the loop makes the
-    * same progress guarantee as repeated flushPending calls without
-    * ever waiting past the first covering stamp.
-    */
-  private def drainToBudget(budgetMs: Long): (Vector[DataFrame], Boolean) = {
-    // the freshness horizon is pinned at ENTRY — staleness is measured
-    // from request arrival, not from a moving "now": a re-evaluated
-    // horizon is a livelock under sustained refill (per-pin latency
-    // above the budget means no stamp is ever fresh enough when it
-    // lands), while the entry horizon is covered at latest by the
-    // snapshot this drain submits itself (its wall stamp IS the entry
-    // instant), so termination is one overdue-prefix drain, never the
-    // refilling tail
-    val horizon = System.currentTimeMillis() - budgetMs
-    var f = synchronized(submitFlush())
+    val horizon = System.currentTimeMillis() - budget.longValue
+    var f: java.util.concurrent.Future[_] = null
     while (true) {
-      val (quiesced, bs, hc, walls, pinnedThrough) = synchronized {
+      val (quiesced, h) = synchronized {
+        // write() appends under `this`; queuedFlushes releases only after
+        // the snapshot's append or re-prepend
         val q = pending.isEmpty && queuedFlushes.get == 0
-        if (q) pinnedThroughWallMs = System.currentTimeMillis()
-        (q, batches, headCompacted, batchWallMs, pinnedThroughWallMs)
+        if (q)
+          hot = hot.copy(pinnedThroughWallMs = System.currentTimeMillis())
+        (q, hot)
       }
-      if (quiesced) return (bs, hc)
-      // first covering index: walls ascend, so batches[0..i] contain
-      // every post acked at or before walls(i) >= horizon
-      val i = walls.indexWhere(_ >= horizon)
-      if (i >= 0) return (bs.take(i + 1), hc)
-      if (pinnedThrough >= horizon) return (bs, hc)
+      if (quiesced) return h
+      h.covering(horizon) match {
+        case Some(v) =>
+          if (f == null) {
+            staleReadsTotal.incrementAndGet()
+            if (v.batches.size == 1 && v.headCompacted)
+              staleHeadReadsTotal.incrementAndGet()
+          }
+          return v
+        case None =>
+      }
       if (f == null || f.isDone) f = synchronized(submitFlush())
-      if (f == null) Thread.sleep(1) // not quiesced ⇒ transiently racing
-      else
-        try f.get(50, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch { case _: java.util.concurrent.TimeoutException => () }
+      try f.get(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+      catch { case _: java.util.concurrent.TimeoutException => () }
     }
     throw new IllegalStateException("unreachable")
   }
@@ -885,13 +811,7 @@ final class HttpApi(spark: SparkSession,
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-writes")
     var pinned = false
-    try pinBatchImpl(snap, onPinned = () => {
-      pinned = true
-      // onPinned runs under `this` right after the batch append: the
-      // snapshot's rows are now readable, so the staleness bound moves
-      pinnedThroughWallMs = math.max(pinnedThroughWallMs, snapWallMs)
-      batchWallMs :+= snapWallMs
-    })
+    try pinBatchImpl(snap, snapWallMs, onPinned = () => pinned = true)
     finally {
       // re-prepend BEFORE releasing the slot: a staleness-bounded read's
       // quiesce check (pending.isEmpty && queuedFlushes == 0) must never
@@ -907,8 +827,8 @@ final class HttpApi(spark: SparkSession,
     }
   }
 
-  private def pinBatchImpl(
-      snap: Vector[PendingPost], onPinned: () => Unit): Unit = {
+  private def pinBatchImpl(snap: Vector[PendingPost], snapWallMs: Long,
+      onPinned: () => Unit): Unit = {
     import spark.implicits._
     // one driver row per SERIES, samples riding as a (ts_ms, value)
     // array: [[Ingest.ingestLabeled]] only touches `labels`, so the
@@ -944,9 +864,9 @@ final class HttpApi(spark: SparkSession,
       .coalesce(parts), "hot-batch")
     val minTs = snap.map(_.minTs).min
     synchronized {
-      batches :+= batch
-      batchMins :+= minTs
-      batchPaths :+= path
+      // the snapshot's rows are now readable, so the staleness bound
+      // moves to its stamp
+      hot = hot.appended(graft.store.HotBatch(batch, minTs, snapWallMs, path))
       onPinned()
       // group-commit chaining: posts that buffered past the threshold
       // while THIS pin materialized get their flush now — without it
@@ -957,7 +877,6 @@ final class HttpApi(spark: SparkSession,
       if (pending.size >= flushEveryPosts ||
         pendingRowCount >= flushEveryRows) submitFlush()
       if (minTs < lastSpillCutoff) coldDirty = true
-      pinsSinceFullFold += 1
       // bounded union depth, OFF the write path: the fold runs in the
       // background over a snapshot prefix, swapped in copy-on-write
       maybeScheduleCompact()
@@ -971,7 +890,7 @@ final class HttpApi(spark: SparkSession,
     * unfolded and unspilled indefinitely on an idle store).
     */
   private def maybeScheduleCompact(): Unit = {
-    val fullWanted = pinsSinceFullFold >= compactEvery
+    val fullWanted = hot.pinsSinceFullFold >= compactEvery
     // a full fold needs the COLD lock (it spills into the current cold
     // generation); while compactCold's minutes-long rewrite (or a
     // pre-agg / expiry sweep) holds it, the full DEMOTES to a delta
@@ -981,11 +900,11 @@ final class HttpApi(spark: SparkSession,
     // trigger stays armed and fires when the lock frees (withColdLock
     // re-checks on release).
     val full = fullWanted && !compactLock.isLocked
-    val delta = deltaFoldEvery > 0 && rawTailLen >= deltaFoldEvery
+    val delta = deltaFoldEvery > 0 && hot.rawTailLen >= deltaFoldEvery
     if ((full || delta) && compacting.compareAndSet(false, true))
       compactExec.execute { () =>
         try {
-          if (pinsSinceFullFold >= compactEvery && compactLock.tryLock())
+          if (hot.pinsSinceFullFold >= compactEvery && compactLock.tryLock())
             try compactNow() finally compactLock.unlock()
           else if (deltaFoldEvery > 0) deltaFoldNow()
         }
@@ -994,50 +913,32 @@ final class HttpApi(spark: SparkSession,
       }
   }
 
-  /** Raw (unfolded) pins at the tail of the batch vector. */
-  private def rawTailLen: Int = {
-    val (b, hc, mids) = (batches, headCompacted, midBatches)
-    b.size - (if (hc && b.nonEmpty) 1 else 0) - mids
-  }
-
   /** Batches appended since the last completed compaction, INCLUDING
     * flush snapshots queued on the flusher but not yet pinned — so
     * "pendingBatches == 0" still means fully quiesced (pinned AND
     * folded), exactly what restart/spill tests and operators poll for.
     */
-  def pendingBatches: Int = pinnedPending + queuedFlushes.get
-
-  /** Flush snapshots queued on the flusher but not yet pinned — probe
-    * observability: StreamLossProbe arms its executor kill on this
-    * going positive (a pin job actually in flight).
-    */
-  private[graft] def queuedFlushCount: Int = queuedFlushes.get
+  def pendingBatches: Int =
+    // queue first: a pin appends to the tier BEFORE releasing its queue
+    // slot, so a landing pin is counted in at least one of the two
+    queuedFlushes.get + hot.pinnedPending
 
   /** Mid (delta-folded) batches between head and raw tail (tests/soak). */
-  private[graft] def midCount: Int = midBatches
+  private[graft] def midCount: Int = hot.mids
 
   /** Total pinned hot relations: head + mids + raw tail (tests/soak). */
-  private[graft] def hotDepth: Int = batches.size
-
-  /** PINNED batches since the last completed compaction — the compact
-    * trigger counts only these (a queued-but-unpinned flush must not
-    * start a fold that would miss it).
-    */
-  private def pinnedPending: Int = {
-    val (b, hc) = (batches, headCompacted)
-    b.size - (if (hc && b.nonEmpty) 1 else 0)
-  }
+  private[graft] def hotDepth: Int = hot.batches.size
 
   /** The raw appended store (tests/introspection): a union of pinned
     * batches between compactions — never an aggregate.
     */
   def rawPoints: Option[DataFrame] = {
     flushPending()
-    unionAll(batches)
+    unionAll(hot.batches)
   }
 
-  private def unionAll(bs: Vector[DataFrame]): Option[DataFrame] =
-    bs.reduceOption(_.unionByName(_))
+  private def unionAll(bs: Vector[graft.store.HotBatch]): Option[DataFrame] =
+    bs.map(_.df).reduceOption(_.unionByName(_))
 
   /** The LWW dedup shape shared by reads and compaction: later writes win
     * per (series, ts); ties break on value (O2 semantics,
@@ -1114,36 +1015,17 @@ final class HttpApi(spark: SparkSession,
     // their own pool so the pin lane is never queued behind them.
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
-    val (snap, snapMins, snapWalls, snapPaths, prefixLen) = synchronized {
-      ((batches, batchMins, batchWallMs, batchPaths,
-        (if (headCompacted && batches.nonEmpty) 1 else 0) + midBatches))
-    }
-    val raw = snap.drop(prefixLen)
+    val snap = hot
+    val raw = snap.rawTail
     if (raw.size < 2) return
     val (folded, foldedPath) =
       pinHot(lwwDedup(unionAll(raw).get), "hot-midfold")
+    // folds serialize on foldLock, so the snapshot's prefix is still the
+    // live one; pins appended meanwhile stay behind the new mid. Delta
+    // retirees ACCUMULATE (deleted only by the full fold after next, one
+    // full generation of grace — ADVICE r13)
     synchronized {
-      // the prefix [0, prefixLen) is stable (folds serialize on
-      // foldLock) and appends only extend the tail, so the
-      // take/drop arithmetic below cannot misalign
-      batches = batches.take(prefixLen) ++
-        (folded +: batches.drop(snap.size))
-      batchMins = batchMins.take(prefixLen) ++
-        (snapMins.slice(prefixLen, snap.size).min +:
-          batchMins.drop(snap.size))
-      batchPaths = batchPaths.take(prefixLen) ++
-        (foldedPath +: batchPaths.drop(snap.size))
-      // the mid's completeness stamp = its newest member's (the prefix
-      // through this mid contains every post acked at or before it)
-      batchWallMs = batchWallMs.take(prefixLen) ++
-        (snapWalls.slice(prefixLen, snap.size).foldLeft(0L)(math.max) +:
-          batchWallMs.drop(snap.size))
-      midBatches += 1
-      // delta retirees ACCUMULATE (deleted only by the full fold after
-      // next, one full generation of grace — ADVICE r13); nothing drops
-      // on the delta cadence
-      retiredCurGen = retiredCurGen ++
-        snapPaths.slice(prefixLen, snap.size).filter(_.nonEmpty)
+      hot = hot.deltaFolded(snap.batches.size, folded, foldedPath)
     }
   }
 
@@ -1159,10 +1041,9 @@ final class HttpApi(spark: SparkSession,
     // background-upkeep pool, not the pin lane (see deltaFoldNow)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
-    // (batches, batchMins) snapshot under the write lock — a concurrent
-    // write could otherwise publish the new vector before its mins entry
-    val (snap, snapMins, snapWalls) =
-      synchronized((batches, batchMins, batchWallMs))
+    val tier = hot
+    val snap = tier.batches
+    if (snap.isEmpty) return
     // snapshot the block flag ONCE: re-reading the volatile at each gate
     // lets a concurrent block+unblock skip the sidecar yet still spill —
     // reintroducing the stale-sidecar hazard the ordering below fixes
@@ -1170,12 +1051,10 @@ final class HttpApi(spark: SparkSession,
     // an already-compacted head is only skippable when it has nothing to
     // spill — data ages past the horizon (or a lifted write block leaves
     // aged data behind), and the fold below is what tiers it out
+    val snapMin = snap.map(_.minTs).min
     val spillable = coldPath.nonEmpty && !blocked &&
-      snapMins.nonEmpty &&
-      snapMins.min < System.currentTimeMillis() - hotRetainMs
-    if (snap.isEmpty || (snap.size == 1 && headCompacted && !spillable))
-      return
-    val snapMin = snapMins.min
+      snapMin < System.currentTimeMillis() - hotRetainMs
+    if (snap.size == 1 && tier.headCompacted && !spillable) return
     val (folded0, folded0Path) =
       pinHot(lwwDedup(unionAll(snap).get), "hot-fold")
     // T9 dim upkeep: fold the snapshot's per-series TTLs into the pinned
@@ -1303,42 +1182,27 @@ final class HttpApi(spark: SparkSession,
       case None => (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
     }
     val dropNow = synchronized {
-      val tailMins = batchMins.drop(snap.size)
       if (overlapTo != Long.MinValue) {
         // keys below the PREVIOUS frontier may already be on disk, and
         // batches appended DURING the fold may now sit below the new one
         if (snapMin < lastSpillCutoff) coldDirty = true
-        if (tailMins.exists(_ < overlapTo)) coldDirty = true
+        if (hot.batches.drop(snap.size).exists(_.minTs < overlapTo))
+          coldDirty = true
         // monotone: a later fold can spill a LOWER max (backfill data
         // below an earlier spill's keys) — the frontier keeps covering
         // everything ever written to disk
         lastSpillCutoff = math.max(lastSpillCutoff, overlapTo)
       }
       newDim.foreach(d => ttlDim = Some(d))
-      val snapPaths = batchPaths.take(snap.size)
-      batches = folded +: batches.drop(snap.size)
-      batchMins = foldedMin +: tailMins
-      batchPaths = foldedPath +: batchPaths.drop(snap.size)
-      // the fold's view-completeness stamp: the newest folded batch's
-      // (max for the restart-less empty-stamp edge, where a pre-stamp
-      // head carries 0 — monotonicity keeps tier 1 conservative)
-      batchWallMs = snapWalls.take(snap.size)
-        .foldLeft(0L)(math.max) +: batchWallMs.drop(snap.size)
-      headCompacted = true
-      // everything folded — mids included; pins appended DURING the
-      // fold (the remaining raw tail) count toward the next full fold
-      midBatches = 0
-      pinsSinceFullFold = batches.size - 1
-      // retire superseded staged pins with ONE FULL-fold generation of
-      // grace (readers holding plans over the old batches finish their
-      // scans — the coldGen discipline); the PREVIOUS generation's
-      // retirees (including delta-fold retirees accumulated since —
-      // ADVICE r13) delete now, outside the lock
-      val out = retiredPrevGen
-      retiredPrevGen = (retiredCurGen ++ (snapPaths :+
-        (if (foldedPath != folded0Path) folded0Path else "")))
-        .filter(_.nonEmpty)
-      retiredCurGen = Vector.empty
+      // everything folded — mids included — becomes the head; the
+      // superseded pins (and the untrimmed fold, when a spill trimmed
+      // it) retire with ONE FULL-fold generation of grace (readers
+      // holding plans over the old batches finish their scans — the
+      // coldGen discipline); the PREVIOUS generation's retirees delete
+      // now, outside the lock
+      val (next, out) = hot.fullFolded(snap.size, folded, foldedPath,
+        foldedMin, Option.when(foldedPath != folded0Path)(folded0Path).toSeq)
+      hot = next
       out
     }
     dropNow.foreach(p => graft.store.Stage.drop(spark, p))
@@ -1375,7 +1239,7 @@ final class HttpApi(spark: SparkSession,
           val dimNames = spark.read.parquet(ep)
             .select(explode(col("names")).as("n"))
             .distinct().as[String].collect().toSeq
-          val hotNames = unionAll(synchronized(batches)) match {
+          val hotNames = unionAll(hot.batches) match {
             case Some(h) =>
               h.select(explode(map_keys(col("labels"))).as("n"))
                 .distinct().as[String].collect().toSeq
@@ -1619,10 +1483,10 @@ final class HttpApi(spark: SparkSession,
     // behind the spill frontier; clearing unconditionally would
     // lose its overlap flag and reads would skip the LWW dedup a
     // duplicated key needs. Recompute from the hot mins under the
-    // write lock (a concurrent append either shows in batchMins or
+    // write lock (a concurrent append either shows in the hot tier or
     // sets the flag itself afterwards — no lost update).
     synchronized {
-      coldDirty = batchMins.exists(_ < lastSpillCutoff)
+      coldDirty = hot.batches.exists(_.minTs < lastSpillCutoff)
       // the new generation is fully deduped: tracking restarts empty
       // (no spill can have raced this — compactLock is held)
       dirtyColdDays = Some(Set.empty)
@@ -1714,17 +1578,18 @@ final class HttpApi(spark: SparkSession,
     * set one).
     */
   private def dedupedPoints(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] =
-    mergedDeduped(fromMs, toMs).map(applyTtl(_, batches))
+      toMs: Long = Long.MaxValue,
+      view: graft.store.HotTier = readView()): Option[DataFrame] =
+    mergedDeduped(fromMs, toMs, view).map(applyTtl(_, view))
 
   /** The merged hot ∪ cold LWW view WITHOUT the T9 filter (debug dumps
-    * need to show expired-but-registered series too).
+    * need to show expired-but-registered series too). `view` defaults to
+    * read-your-writes across the micro-batch buffer (or the cheapest
+    * staleness-budgeted view when the request opted in).
     */
   private def mergedDeduped(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] = {
-    // read-your-writes across the micro-batch buffer (or the cheapest
-    // staleness-budgeted view when the request opted in)
-    val (bs, hc) = readView()
+      toMs: Long = Long.MaxValue,
+      view: graft.store.HotTier = readView()): Option[DataFrame] = {
     // time bounds apply BELOW the dedup aggregate (ts_ms is a grouping
     // key, so this is where the scan-level pruning comes from)
     def bounded(df: DataFrame): DataFrame =
@@ -1735,10 +1600,10 @@ final class HttpApi(spark: SparkSession,
     // unless a backfill crossed the spill frontier (coldDirty) — for
     // append-mostly workloads reads are pure scans
     def hotDeduped(h: DataFrame): DataFrame =
-      if (bs.size == 1 && hc) h else lwwDedup(h)
+      if (view.batches.size == 1 && view.headCompacted) h else lwwDedup(h)
     val deduped =
       (coldPoints(fromMs, toMs).map(bounded),
-        unionAll(bs).map(bounded)) match {
+        unionAll(view.batches).map(bounded)) match {
         case (Some(c), Some(h)) =>
           Some(if (coldDirty) lwwDedup(c.unionByName(h))
           else c.unionByName(hotDeduped(h)))
@@ -1770,10 +1635,10 @@ final class HttpApi(spark: SparkSession,
     * a shuffle join instead of a driver OOM). Absent row = default TTL =
     * survives.
     */
-  private def applyTtl(d: DataFrame, bs: Vector[DataFrame]): DataFrame =
+  private def applyTtl(d: DataFrame, view: graft.store.HotTier): DataFrame =
     if (!ttlSeen) d
     else {
-      val hotTtls = unionAll(bs)
+      val hotTtls = unionAll(view.batches)
         .map(_.select(col("metric_id"), col("__ttl_sec")))
       val dims = (ttlDim, hotTtls) match {
         case (Some(t), Some(ht)) => Some(t.unionByName(ht))
@@ -2109,17 +1974,20 @@ final class HttpApi(spark: SparkSession,
       // the raw tail only exists when the window reaches past the
       // watermark — a historical dashboard query (the common routed
       // shape) is a pure agg scan with no tail subplan at all
+      val tailFrom = math.max(fromMs, wm)
+      // one hot view serves the tail scan AND the TTL history; a pure
+      // agg scan reads no hot rows, so it takes the tier without a drain
+      val view = if (tailFrom > toMs) hot else readView()
       val tail =
-        if (math.max(fromMs, wm) > toMs) None
-        else dedupedPoints(math.max(fromMs, wm), toMs)
+        if (tailFrom > toMs) None
+        else dedupedPoints(tailFrom, toMs, view)
           .map(d => aggSlice(d.where(col("ts_ms") >= wm)).drop("month"))
       val routed = tail.fold(old.drop("month"))(t =>
         old.drop("month").unionByName(t))
-      val bs = batches
       Some(applyTtl(
         routed.select(col("labels"), col("metric_id"),
           col("bucket_ms").as("ts_ms"), col(column).as("value"),
-          lit(0L).as("__seq"), col("__ttl_sec")), bs))
+          lit(0L).as("__seq"), col("__ttl_sec")), view))
     }
   }
 
@@ -2212,12 +2080,9 @@ final class HttpApi(spark: SparkSession,
     // reclaim this store's staged hot pins (retired AND live: the store
     // is gone, so the hot tail's lifecycle ends here exactly as the
     // localCheckpoint path's blocks end with the JVM — the durable tier
-    // holds everything the fold already spilled)
-    if (durableHot) {
-      synchronized { retiredPrevGen = Vector.empty
-        retiredCurGen = Vector.empty; batchPaths = Vector.empty }
-      graft.store.Stage.clearDetached(spark, hotScope)
-    }
+    // holds everything the fold already spilled). A later retire of an
+    // already-cleared path is a no-op.
+    if (durableHot) graft.store.Stage.clearDetached(spark, hotScope)
   }
 
   private def handle(h: HttpExchange): Unit =
@@ -2657,7 +2522,7 @@ final class HttpApi(spark: SparkSession,
         PromJson.success("""{"resultType":"matrix","result":[]}"""))
       case Some(src) =>
         val tB = System.nanoTime()
-        val df = unalias(QueryService.queryRange(q, src, p,
+        val df = unalias(QueryService.queryRange(ast, src, p,
           requestOptions(h)))
         if (verbose) println(df.queryExecution.optimizedPlan.toString)
         val labels = df.columns.filterNot(Set("eval_ms", "value")).toSeq
@@ -2701,7 +2566,7 @@ final class HttpApi(spark: SparkSession,
       case None => respond(h, 200,
         PromJson.success("""{"resultType":"vector","result":[]}"""))
       case Some(src) =>
-        val df = unalias(QueryService.queryRange(q, src, p,
+        val df = unalias(QueryService.queryRange(ast, src, p,
           requestOptions(h)))
         val labels = df.columns.filterNot(Set("eval_ms", "value")).toSeq
         // presentation ordering for a top-level sort function — applied

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.promql.{Compiler, EvalParams, Expr, Parser, PromSource,
+import graft.promql.{Compiler, EvalParams, Expr, PromSource,
   Selector, FuncCall, InfoCall, LabelCall, Subquery, Agg, BinOp}
 import graft.tsdb.{Matcher, MatchEq, Matchers, MutableMapping, MutableProvider}
 
@@ -40,9 +40,13 @@ final case class RequestOptions(
 
 object QueryService {
 
-  def queryRange(promql: String, src: PromSource, p: EvalParams,
+  /** Compile one parsed PromQL expression through the wrapper chain. The
+    * caller parses once and reuses the AST (time bounds, pre-agg routing,
+    * presentation order) — there is deliberately no `String` overload.
+    */
+  def queryRange(expr: Expr, src: PromSource, p: EvalParams,
       opts: RequestOptions = RequestOptions()): DataFrame = {
-    val ast = rewrite(Parser.parse(promql), opts)
+    val ast = rewrite(expr, opts)
     val df = Compiler.compile(ast, src, p)
     withLimits(df, src.labelCols, opts)
   }

@@ -130,9 +130,9 @@ object PipelineQueries {
   // repeated-chunk dedup: consecutive 12-token spans (the paragraph/line
   // analog for the whitespace-flat synthetic docs); kNN classification
   // votes over the brute-force top-5
-  // ChunkKeyProbe reproduces the pre-r16 text-keyed x16 arm and must
-  // chunk at the same width
-  private[graft] val ChunkTokens = 12
+  // the pre-r16 text-keyed x16 arm measured against this width is in
+  // SCALE.md "Round-16: the x16 fourth-decade claim closes"
+  private val ChunkTokens = 12
   // exact-substring dedup (Lee et al. 2021): duplicated-run window
   // length in tokens — the paper uses 50 BPE tokens on web corpora;
   // 10 fits the short synthetic docs while keeping chance collisions

@@ -541,7 +541,7 @@ object TsdbQueries {
           .withColumn("user_id", col("user_id").cast("string")),
         Seq("__name__", "user_id", "event_type"), n => col(n))
       graft.api.QueryService.queryRange(
-          "sum by (event_type) (events_value)", src,
+          graft.promql.Parser.parse("sum by (event_type) (events_value)"), src,
           EvalParams(Jan10, Jan25, Hour, lookbackMs = SixH))
         // r6, not round(): the sum beneath is now bit-identical across
         // engines and parallelisms (Compiler.sumDet), so the

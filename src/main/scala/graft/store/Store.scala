@@ -545,7 +545,8 @@ object Store {
 
   /** Inverted-list balance of the current index root: max/median cell
     * size — the drift statistic a deployment gets FREE at write time
-    * (IvfChurnProbe: frozen-quantizer recall parts from the retrained
+    * (SCALE.md "Round-13: IVF lifecycle under churn": frozen-quantizer
+    * recall parts from the retrained
     * ceiling once this passes ~15-20; recall itself needs ground truth,
     * list sizes need one K-row aggregate). Folds the per-generation
     * `_counts` sidecars — delta-sized work; a root holding any legacy

@@ -258,7 +258,8 @@ class ComplianceCorpusSpec extends SparkSpec {
           e: EvalParams): Map[(String, Long), Double] = {
         val src = api.querySource("default", mint, maxt,
           allowRoute = route).get
-        val df = graft.api.QueryService.queryRange(q, src, e)
+        val df = graft.api.QueryService.queryRange(
+          graft.promql.Parser.parse(q), src, e)
         if (!df.columns.contains("eval_ms")) // top-level scalar literal
           Map(("", 0L) -> df.collect().head.getAs[Double]("value"))
         else {

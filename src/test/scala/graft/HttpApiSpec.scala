@@ -648,7 +648,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     val pOff = EvalParams(T0 + day, T9 + day, 60000L, 300000L)
     val (mint, maxt) = QueryService.timeBounds(
       Parser.parse("dm offset 1d"), pOff)
-    val shifted = QueryService.queryRange("dm offset 1d",
+    val shifted = QueryService.queryRange(Parser.parse("dm offset 1d"),
       api4.source("default", mint, maxt).get, pOff)
     assert(shifted.count() > 0)
   }
@@ -1201,8 +1201,8 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       val src = apiPS.querySource("default", T0 - 900000L,
         T0 + n * 300000L, allowRoute = true).get
       val p = graft.promql.EvalParams(T0, T0 + (n - 1) * 300000L, 600000L)
-      val df = graft.api.QueryService.queryRange(
-        "max_over_time(ps_a[10m]) + min_over_time(ps_b[10m])", src, p)
+      val df = graft.api.QueryService.queryRange(graft.promql.Parser.parse(
+        "max_over_time(ps_a[10m]) + min_over_time(ps_b[10m])"), src, p)
       val plan = df.queryExecution.executedPlan.toString
       val aggScans = plan.sliding("_agg5m".length).count(_ == "_agg5m")
       assert(aggScans >= 2,
@@ -1481,66 +1481,99 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     // the reference's remote-storage-test2 churn shape
     // (tests/remote-storage-test2/main.go:29-40): 500 ms resolution,
     // every compaction spills EVERYTHING (hotRetainMs=0) so each new
-    // write lands behind the frontier and reads constantly cross it
+    // write lands behind the frontier and reads constantly cross it;
+    // delta folds run between the full folds, so reads also race the
+    // mid-level restructure of the hot tier
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("graft_soak")
       .resolve("cold").toString
-    val apiS = new HttpApi(spark, compactEvery = 2,
+    val apiS = new HttpApi(spark, compactEvery = 3, deltaFoldEvery = 2,
       durablePath = Some(dir), hotRetainMs = 0L)
-    val writers = 4
-    val rounds = 3
-    val samples = 40 // 500 ms apart
-    def batch(w: Int, r: Int) = Seq(PromSeries(
-      Map("__name__" -> s"sk_$w", "job" -> "soak"),
-      (0 until samples).map(i => (T0 + i * 500L, r * 1000.0 + w * 100 + i))))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val ws = (0 until writers).map { w =>
-      pool.submit(new Runnable {
-        def run(): Unit = try {
-          // each round REWRITES the writer's series (LWW churn)
-          for (r <- 0 until rounds) apiS.write(batch(w, r), "default")
-        } catch { case t: Throwable => errs.add(t) }
-      })
+    val portS = apiS.start(0)
+    // an instant count over every soak series, through the HTTP handler
+    // (strict when `staleness` is None, else bounded-staleness)
+    def countOverHttp(staleness: Option[String]): HttpResponse[String] = {
+      val b = HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:$portS/api/v1/query?query=" +
+          enc("""count({job="soak"})""") + s"&time=${T0 / 1000 + 19}"))
+      staleness.foreach(b.header("X-SquirrelDB-Max-Staleness", _))
+      client.send(b.GET().build(), HttpResponse.BodyHandlers.ofString())
     }
-    val rs = (0 until 2).map { k =>
-      pool.submit(new Runnable {
-        def run(): Unit = try {
-          for (i <- 0 until 6) {
-            // reads race the fold, the spill and the dirty-flag flips
-            apiS.source().foreach(
-              _.points.where(col("__name__").startsWith("sk_")).count())
-            apiS.readSeriesFrame(Prompb.ReadQuery(T0,
-              T0 + samples * 500L, Seq(MatchEq("job", "soak"))))
-              .foreach(_.count())
-            // routed reads race the agg table's generational rebuilds
-            apiS.routedSource("default", T0, T0 + samples * 500L, "avg")
-              .foreach(_.points.count())
-            if (k == 0 && i == 3) apiS.compactCold() // mid-churn rewrite
-            if (k == 1 && i >= 2) // repeated re-agg flips generations
-              apiS.forcePreAggregate(T0, T0 + samples * 500L)
-          }
-        } catch { case t: Throwable => errs.add(t) }
-      })
-    }
-    (ws ++ rs).foreach(_.get())
-    pool.shutdown()
-    assert(errs.isEmpty, errs.toArray.mkString("; "))
-    apiS.compact()
-    val pts = apiS.source().get.points
-      .where(col("__name__").startsWith("sk_"))
-      .select("__name__", "ts_ms", "value").collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // exactly once per (series, ts) — collect() to a Map would hide
-    // dupes, so count the plan-side rows too
-    assert(apiS.source().get.points
-      .where(col("__name__").startsWith("sk_")).count()
-      === writers.toLong * samples, "lost or duplicated points")
-    // every surviving value is the LAST round's rewrite (per-writer
-    // sequential rounds → highest __seq wins through every churn path)
-    for (w <- 0 until writers; i <- 0 until samples)
-      assert(pts((s"sk_$w", T0 + i * 500L))
-        === (rounds - 1) * 1000.0 + w * 100 + i)
+    try {
+      val writers = 4
+      val rounds = 3
+      val samples = 40 // 500 ms apart
+      def batch(w: Int, r: Int) = Seq(PromSeries(
+        Map("__name__" -> s"sk_$w", "job" -> "soak"),
+        (0 until samples).map(i => (T0 + i * 500L, r * 1000.0 + w * 100 + i))))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(10)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val ws = (0 until writers).map { w =>
+        pool.submit(new Runnable {
+          def run(): Unit = try {
+            // each round REWRITES the writer's series (LWW churn)
+            for (r <- 0 until rounds) apiS.write(batch(w, r), "default")
+          } catch { case t: Throwable => errs.add(t) }
+        })
+      }
+      val rs = (0 until 2).map { k =>
+        pool.submit(new Runnable {
+          def run(): Unit = try {
+            for (i <- 0 until 6) {
+              // reads race the fold, the spill and the dirty-flag flips
+              apiS.source().foreach(
+                _.points.where(col("__name__").startsWith("sk_")).count())
+              apiS.readSeriesFrame(Prompb.ReadQuery(T0,
+                T0 + samples * 500L, Seq(MatchEq("job", "soak"))))
+                .foreach(_.count())
+              // routed reads race the agg table's generational rebuilds
+              apiS.routedSource("default", T0, T0 + samples * 500L, "avg")
+                .foreach(_.points.count())
+              if (k == 0 && i == 3) apiS.compactCold() // mid-churn rewrite
+              if (k == 1 && i >= 2) // repeated re-agg flips generations
+                apiS.forcePreAggregate(T0, T0 + samples * 500L)
+            }
+          } catch { case t: Throwable => errs.add(t) }
+        })
+      }
+      // HTTP readers: strict reads drain the flush queue; budgeted reads
+      // serve a covering prefix of the hot tier or wait to coverage —
+      // both while folds, spills and the cold rewrite swap the tier
+      val hs = Seq(Some("0.001"), Some("30"), None).map { staleness =>
+        pool.submit(new Runnable {
+          def run(): Unit = try {
+            for (_ <- 0 until 6) {
+              val r = countOverHttp(staleness)
+              assert(r.statusCode() === 200, r.body())
+              assert(r.body().contains(""""status":"success""""), r.body())
+            }
+          } catch { case t: Throwable => errs.add(t) }
+        })
+      }
+      (ws ++ rs ++ hs).foreach(_.get())
+      pool.shutdown()
+      assert(errs.isEmpty, errs.toArray.mkString("; "))
+      apiS.compact()
+      val pts = apiS.source().get.points
+        .where(col("__name__").startsWith("sk_"))
+        .select("__name__", "ts_ms", "value").collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      // exactly once per (series, ts) — collect() to a Map would hide
+      // dupes, so count the plan-side rows too
+      assert(apiS.source().get.points
+        .where(col("__name__").startsWith("sk_")).count()
+        === writers.toLong * samples, "lost or duplicated points")
+      // every surviving value is the LAST round's rewrite (per-writer
+      // sequential rounds → highest __seq wins through every churn path)
+      for (w <- 0 until writers; i <- 0 until samples)
+        assert(pts((s"sk_$w", T0 + i * 500L))
+          === (rounds - 1) * 1000.0 + w * 100 + i)
+      // quiesced: a budgeted read serves the whole store, like a strict one
+      for (staleness <- Seq(Some("30"), None)) {
+        val body = countOverHttp(staleness).body()
+        assert(body.contains(s"""[${T0 / 1000 + 19},"$writers"]"""), body)
+      }
+    } finally apiS.stop()
   }
 
   test("debug tooling: dump by expiration/shard/posting, index " +

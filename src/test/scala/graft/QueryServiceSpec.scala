@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.api.{QueryService, RequestOptions}
-import graft.promql.{EvalParams, PromSource}
+import graft.promql.{EvalParams, Parser, PromSource}
 import graft.tsdb._
 
 /** §3.1 per-request wrapper chain: tenant and forced matchers reach every
@@ -33,9 +33,10 @@ class QueryServiceSpec extends SparkSpec {
     // both sides of the binop get the tenant filter — the non-click side
     // becomes empty, so the sum equals the click-only sum
     val got = QueryService.queryRange(
-      """sum(events) + sum(events{event_type=~"click|view"})""",
+      Parser.parse("""sum(events) + sum(events{event_type=~"click|view"})"""),
       src, p, opts)
-    val clickOnly = QueryService.queryRange("sum(events) * 2", src, p, opts)
+    val clickOnly =
+      QueryService.queryRange(Parser.parse("sum(events) * 2"), src, p, opts)
     val joined = got.withColumnRenamed("value", "a")
       .join(clickOnly.withColumnRenamed("value", "b"), "eval_ms")
     assert(joined.where(col("a") =!= col("b")).count() === 0L)
@@ -43,14 +44,14 @@ class QueryServiceSpec extends SparkSpec {
 
     // a user matcher cannot shadow the forced one: forced click ∧ user view = ∅
     val shadowed = QueryService.queryRange(
-      """events{event_type="view"}""", src, p,
+      Parser.parse("""events{event_type="view"}"""), src, p,
       RequestOptions(forced = Seq(MatchEq("event_type", "click"))))
     assert(shadowed.count() === 0L)
   }
 
   test("per-selector routing hint: innermost enclosing function reaches " +
     "routeFor, including through subqueries (counter safety)") {
-    import graft.promql.{Compiler, Parser}
+    import graft.promql.Compiler
     val calls = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
     val recording = src.copy(routeFor = { fn => calls += fn; None })
     def hintsOf(q: String): Seq[Option[String]] = {
@@ -77,10 +78,10 @@ class QueryServiceSpec extends SparkSpec {
     val mapping = MutableMapping("t1", "group", "event_type",
       Map("interactive" -> Seq("click", "view")))
     val got = QueryService.queryRange(
-      """sum(events{group="interactive"})""", src, p,
+      Parser.parse("""sum(events{group="interactive"})"""), src, p,
       RequestOptions(mutable = Seq(mapping)))
     val want = QueryService.queryRange(
-      """sum(events{event_type=~"click|view"})""", src, p)
+      Parser.parse("""sum(events{event_type=~"click|view"})"""), src, p)
     val joined = got.withColumnRenamed("value", "a")
       .join(want.withColumnRenamed("value", "b"), "eval_ms")
     assert(joined.where(col("a") =!= col("b")).count() === 0L)
@@ -88,28 +89,28 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("series limit aborts lazily when exceeded, passes under the cap") {
-    val under = QueryService.queryRange("events", src, p,
+    val under = QueryService.queryRange(Parser.parse("events"), src, p,
       RequestOptions(maxSeries = Some(100)))
     assert(under.count() > 0) // 5 event types ≤ 100
-    val over = QueryService.queryRange("events", src, p,
+    val over = QueryService.queryRange(Parser.parse("events"), src, p,
       RequestOptions(maxSeries = Some(2)))
     intercept[Exception](over.collect())
   }
 
   test("points limit (F14) aborts through the chain; both limits compose") {
-    val under = QueryService.queryRange("events", src, p,
+    val under = QueryService.queryRange(Parser.parse("events"), src, p,
       RequestOptions(maxPoints = Some(1000000)))
     assert(under.count() > 0)
-    val over = QueryService.queryRange("events", src, p,
+    val over = QueryService.queryRange(Parser.parse("events"), src, p,
       RequestOptions(maxPoints = Some(10)))
     val e = intercept[Exception](over.collect())
     assert(e.getMessage.contains("points")
       || Option(e.getCause).exists(_.getMessage.contains("points")))
     // both limits set: the tighter one fires
-    val both = QueryService.queryRange("events", src, p,
+    val both = QueryService.queryRange(Parser.parse("events"), src, p,
       RequestOptions(maxSeries = Some(100), maxPoints = Some(10)))
     intercept[Exception](both.collect())
-    val bothOk = QueryService.queryRange("sum(events)", src, p,
+    val bothOk = QueryService.queryRange(Parser.parse("sum(events)"), src, p,
       RequestOptions(maxSeries = Some(100), maxPoints = Some(1000000)))
     assert(bothOk.count() > 0)
   }
