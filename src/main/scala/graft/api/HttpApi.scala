@@ -60,7 +60,14 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * thread over a snapshot prefix and swaps in copy-on-write, so no
   * write ever waits on it. Last-write-wins conflict resolution moves to
   * the read side (the verified O2 dedup shape). The durable path at
-  * scale is `store.Store.writePoints` (S8).
+  * scale is `store.Store.writePoints` (S8). A full fold spills rows older
+  * than the hot horizon (aligned down to the 5-min pre-agg resolution)
+  * to the cold tier and raises the snapshot's spill frontier
+  * (`HotTier.coldBelow`, persisted in the restart sidecar before the
+  * spill): every cold row lies below it, so a read whose window starts
+  * at or above the frontier plans no cold scan, and one that starts
+  * below scans cold only below its own view's frontier
+  * ([[mergedDeduped]]).
   *
   * Remote read streams: when the client negotiates
   * `STREAMED_XOR_CHUNKS`, series are XOR-chunk-encoded on the EXECUTORS
@@ -165,10 +172,10 @@ final class HttpApi(spark: SparkSession,
   private def pinHot(df: DataFrame, tag: String): (DataFrame, String) =
     if (durableHot) graft.store.Stage.pinIn(hotScope, df, tag)
     else (df.localCheckpoint(true), "")
-  // monotone spill frontier + overlap tracking: a write whose oldest
-  // sample falls behind an earlier spill MAY duplicate keys already on
-  // disk; only then do reads pay the LWW dedup shuffle over the cold tier
-  @volatile private var lastSpillCutoff = Long.MinValue
+  // overlap tracking against the spill frontier (`hot.coldBelow`): a
+  // write whose oldest sample falls behind it MAY duplicate keys already
+  // on disk; only then do reads pay the LWW dedup shuffle over the cold
+  // tier
   @volatile private var coldDirty = false
   // Partial (leveled) rewrite tracking — the reference's TWCS discipline
   // (`cassandra/tsdb/tsdb.go:205-215`: time-window compaction never
@@ -453,22 +460,24 @@ final class HttpApi(spark: SparkSession,
     }
   }
 
-  // restart metadata sidecar: (writeSeq, labelNames) as one tiny JSON,
-  // plus the TTL dim as parquet — written at each compaction BEFORE the
-  // spill, so the persisted writeSeq always ≥ every __seq on the cold
-  // tier (a crash can over-claim, never under-rank; unspilled hot data
-  // dies with the process either way). With it, restart is O(1); without
-  // it (pre-r7 layouts) bootstrap falls back to the full-history scan —
-  // at 100 TB that scan is 3 passes over the cold tier, which is why the
+  // restart metadata sidecar: (writeSeq, labelNames, coldBelow) as one
+  // tiny JSON, plus the TTL dim as parquet — written at each compaction
+  // BEFORE the spill, so the persisted writeSeq always ≥ every __seq and
+  // the persisted spill frontier always > every ts_ms on the cold tier (a
+  // crash can over-claim, never under-rank; unspilled hot data dies with
+  // the process either way). With it, restart is O(1); without it
+  // (pre-r7 layouts) bootstrap falls back to the full-history scan — at
+  // 100 TB that scan is 3 passes over the cold tier, which is why the
   // sidecar exists.
   private def metaPath: Option[java.nio.file.Path] =
     durablePath.map(p => java.nio.file.Paths.get(p + "_meta.json"))
   private def ttlDimPath: Option[String] = durablePath.map(_ + "_ttl")
 
-  private def persistMeta(): Unit = metaPath.foreach { mp =>
+  private def persistMeta(coldBelow: Long): Unit = metaPath.foreach { mp =>
     val names = labelNames.map(n => "\"" + PromJson.escape(n) + "\"")
     val json = s"""{"writeSeq":${synchronized(writeSeq)},""" +
-      s""""ttlSeen":$ttlSeen,"labelNames":[${names.mkString(",")}]}"""
+      s""""ttlSeen":$ttlSeen,"coldBelow":$coldBelow,""" +
+      s""""labelNames":[${names.mkString(",")}]}"""
     val tmp = mp.resolveSibling(mp.getFileName.toString + ".tmp")
     java.nio.file.Files.writeString(tmp, json)
     java.nio.file.Files.move(tmp, mp,
@@ -508,6 +517,8 @@ final class HttpApi(spark: SparkSession,
     durablePath.filter(isDir).foreach(_ => registerColdGen(coldGen))
     aggPath.filter(isDir).map(maxGenIn).filter(_ >= 0)
       .foreach(aggGen = _)
+    // the persisted spill frontier; None when the sidecar predates it
+    var metaColdBelow: Option[Long] = None
     val metaLoaded = metaPath
       .filter(java.nio.file.Files.exists(_)).exists { mp =>
         scala.util.Try {
@@ -520,11 +531,13 @@ final class HttpApi(spark: SparkSession,
             (0 until ln.size()).map(ln.get(_).asText()).sorted
           writeSeq = seq
           ttlSeen = seen
+          metaColdBelow = Option(root.get("coldBelow")).map(_.asLong())
           ttlDimPath.flatMap(completeDimDir).foreach(tp =>
             ttlDim = Some(spark.read.parquet(tp).localCheckpoint(true)))
           true
         }.getOrElse(false)
       }
+    metaColdBelow.foreach(b => hot = hot.copy(coldBelow = b))
     coldPoints().foreach { c =>
       // without the sidecar (pre-r7 layout or torn write): the one-time
       // full-history fallback scan
@@ -534,6 +547,14 @@ final class HttpApi(spark: SparkSession,
           .distinct().as[String].collect().sorted.toSeq
         writeSeq = c.agg(max(col("__seq"))).head()
           .getLong(0) // new writes must outrank restored data
+      }
+      // a sidecar without the spill frontier: one aggregate over the
+      // cold tier restores it (reads and overlap detection rely on every
+      // cold row sitting below it)
+      if (metaColdBelow.isEmpty) {
+        val r = c.agg(max(col("ts_ms"))).head()
+        if (!r.isNullAt(0))
+          hot = hot.copy(coldBelow = r.getLong(0) + 1)
       }
       // the TTL dim must exist whenever TTLs are in play — recompute if
       // the sidecar lacked it (an absent dim would silently un-expire
@@ -876,7 +897,7 @@ final class HttpApi(spark: SparkSession,
       // only overcounts toward "not yet quiesced".)
       if (pending.size >= flushEveryPosts ||
         pendingRowCount >= flushEveryRows) submitFlush()
-      if (minTs < lastSpillCutoff) coldDirty = true
+      if (minTs < hot.coldBelow) coldDirty = true
       // bounded union depth, OFF the write path: the fold runs in the
       // background over a snapshot prefix, swapped in copy-on-write
       maybeScheduleCompact()
@@ -928,6 +949,9 @@ final class HttpApi(spark: SparkSession,
 
   /** Total pinned hot relations: head + mids + raw tail (tests/soak). */
   private[graft] def hotDepth: Int = hot.batches.size
+
+  /** The current hot-tier snapshot, spill frontier included (tests). */
+  private[graft] def hotTier: graft.store.HotTier = hot
 
   /** The raw appended store (tests/introspection): a union of pinned
     * batches between compactions — never an aggregate.
@@ -1029,6 +1053,16 @@ final class HttpApi(spark: SparkSession,
     }
   }
 
+  /** The spill cutoff at wall instant `now`: the hot horizon aligned DOWN
+    * to the pre-agg resolution. A spill's pre-agg watermark then equals
+    * its cutoff, so the watermark never trails the spill frontier (the
+    * hot tier keeps at most one resolution step more).
+    */
+  private def spillCutoff(now: Long): Long = {
+    val c = now - hotRetainMs
+    c - math.floorMod(c, PreAggResolutionMs)
+  }
+
   /** The FULL fold. Callers must hold [[compactLock]] (the spill below
     * appends into the current cold generation); the hot-vector swap
     * itself serializes on [[foldLock]] so delta folds can't restructure
@@ -1052,11 +1086,25 @@ final class HttpApi(spark: SparkSession,
     // spill — data ages past the horizon (or a lifted write block leaves
     // aged data behind), and the fold below is what tiers it out
     val snapMin = snap.map(_.minTs).min
-    val spillable = coldPath.nonEmpty && !blocked &&
-      snapMin < System.currentTimeMillis() - hotRetainMs
+    val cutoff = spillCutoff(System.currentTimeMillis())
+    val spillable = coldPath.nonEmpty && !blocked && snapMin < cutoff
     if (snap.size == 1 && tier.headCompacted && !spillable) return
     val (folded0, folded0Path) =
       pinHot(lwwDedup(unionAll(snap).get), "hot-fold")
+    // the spill's DATA frontier (max spilled ts), taken BEFORE the
+    // sidecar below so the sidecar can claim it: a crash between sidecar
+    // and spill then over-claims the frontier (harmless), where the old
+    // after-spill max left a restart with no frontier at all. None =
+    // nothing to spill. One job, over the pinned fold.
+    val spilledMax: Option[Long] =
+      if (!spillable) None
+      else {
+        val r = folded0.where(col("ts_ms") < cutoff)
+          .agg(max(col("ts_ms"))).head()
+        Option.when(!r.isNullAt(0))(r.getLong(0))
+      }
+    val coldBelow = spilledMax.fold(tier.coldBelow)(m =>
+      math.max(tier.coldBelow, m + 1))
     // T9 dim upkeep: fold the snapshot's per-series TTLs into the pinned
     // dim BEFORE the swap (spilled rows leave memory here, so this is the
     // last cheap look at them). Series that max-merge back to the default
@@ -1084,7 +1132,7 @@ final class HttpApi(spark: SparkSession,
       // the full-history bootstrap fallback would mask it, but only at
       // the cost of a cold rescan on the next restart
       newDim.foreach(d => ttlDimPath.foreach(tp => atomicOverwrite(d, tp)))
-      persistMeta()
+      persistMeta(coldBelow)
     }
     // series-expiry refresh (the reference refreshes each written series'
     // expiration day, `cassandra/index/index.go:1516-1531`): each fold
@@ -1144,7 +1192,7 @@ final class HttpApi(spark: SparkSession,
     // conflated (r13): `aggTo` is a TIME frontier — data at/below the
     // wall-derived cutoff is final-modulo-repair, the reference's
     // fullyAggregatedAt semantics, and may legitimately run ahead of
-    // the data; `overlapTo` is a DATA frontier — the max key actually
+    // the data; `coldBelow` is a DATA frontier — the max key actually
     // on disk + 1. Using the time frontier for overlap detection made
     // every workload whose event time lags the wall clock (backfill /
     // replay streams; the r13 soak's synthetic clock) permanently
@@ -1152,46 +1200,34 @@ final class HttpApi(spark: SparkSession,
     // read paid a global LWW shuffle over hot ∪ cold (measured: read
     // exec 2 s → 49 s as the cold tier grew, then heap death). A write
     // can only duplicate a disk key if it reaches at or below the max
-    // spilled ts; the max runs over the pinned fold, one cheap pass.
-    val (folded, foldedPath, foldedMin, aggTo, overlapTo) = coldPath match {
-      case Some(_) if blocked =>
-        (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-      case Some(path) =>
-        val cutoff = System.currentTimeMillis() - hotRetainMs
-        val spill = folded0.where(col("ts_ms") < cutoff)
-        if (spill.limit(1).count() == 0)
-          (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-        else {
-          spillToCold(spill, path)
-          val spilledMax =
-            spill.agg(max(col("ts_ms"))).head().getLong(0)
+    // spilled ts. The cutoff is aligned to the pre-agg resolution, so
+    // after a spill the agg watermark (= aggTo) sits at or above the
+    // data frontier and a routed read's raw tail is hot-only.
+    val (folded, foldedPath, foldedMin, aggTo) =
+      (coldPath, spilledMax) match {
+        case (Some(path), Some(m)) =>
+          spillToCold(folded0.where(col("ts_ms") < cutoff), path)
           // TWCS bookkeeping: every day this spill may have appended
           // into becomes dirty for the next generation rewrite. The
-          // range form [snapMin, spilledMax] is conservative (snapMin
-          // IS the spill's min — the kept side is all >= cutoff) and
-          // costs no extra job; a backfill too wide to track falls
-          // back to None → one full rewrite
+          // range form [snapMin, m] is conservative (snapMin IS the
+          // spill's min — the kept side is all >= cutoff) and costs no
+          // extra job; a backfill too wide to track falls back to None
+          // → one full rewrite
           synchronized {
-            dirtyColdDays = trackDirtyDays(dirtyColdDays,
-              snapMin, spilledMax)
+            dirtyColdDays = trackDirtyDays(dirtyColdDays, snapMin, m)
           }
           val (trimmed, tp) =
             pinHot(folded0.where(col("ts_ms") >= cutoff), "hot-fold")
-          (trimmed, tp, cutoff, cutoff, spilledMax + 1)
-        }
-      case None => (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-    }
+          (trimmed, tp, cutoff, cutoff)
+        case _ => (folded0, folded0Path, snapMin, Long.MinValue)
+      }
     val dropNow = synchronized {
-      if (overlapTo != Long.MinValue) {
+      if (spilledMax.nonEmpty) {
         // keys below the PREVIOUS frontier may already be on disk, and
         // batches appended DURING the fold may now sit below the new one
-        if (snapMin < lastSpillCutoff) coldDirty = true
-        if (hot.batches.drop(snap.size).exists(_.minTs < overlapTo))
+        if (snapMin < hot.coldBelow) coldDirty = true
+        if (hot.batches.drop(snap.size).exists(_.minTs < coldBelow))
           coldDirty = true
-        // monotone: a later fold can spill a LOWER max (backfill data
-        // below an earlier spill's keys) — the frontier keeps covering
-        // everything ever written to disk
-        lastSpillCutoff = math.max(lastSpillCutoff, overlapTo)
       }
       newDim.foreach(d => ttlDim = Some(d))
       // everything folded — mids included — becomes the head; the
@@ -1199,9 +1235,12 @@ final class HttpApi(spark: SparkSession,
       // it) retire with ONE FULL-fold generation of grace (readers
       // holding plans over the old batches finish their scans — the
       // coldGen discipline); the PREVIOUS generation's retirees delete
-      // now, outside the lock
+      // now, outside the lock. The spill frontier rises in the same
+      // swap (monotone: a backfill spill of a LOWER max never lowers
+      // it), so a view carries the frontier that matches its batches
       val (next, out) = hot.fullFolded(snap.size, folded, foldedPath,
-        foldedMin, Option.when(foldedPath != folded0Path)(folded0Path).toSeq)
+        foldedMin, Option.when(foldedPath != folded0Path)(folded0Path).toSeq,
+        coldBelow)
       hot = next
       out
     }
@@ -1486,7 +1525,7 @@ final class HttpApi(spark: SparkSession,
     // write lock (a concurrent append either shows in the hot tier or
     // sets the flag itself afterwards — no lost update).
     synchronized {
-      coldDirty = hot.batches.exists(_.minTs < lastSpillCutoff)
+      coldDirty = hot.batches.exists(_.minTs < hot.coldBelow)
       // the new generation is fully deduped: tracking restarts empty
       // (no spill can have raced this — compactLock is held)
       dirtyColdDays = Some(Set.empty)
@@ -1577,7 +1616,7 @@ final class HttpApi(spark: SparkSession,
     * per-series TTL dim broadcasts (skipped entirely when no write ever
     * set one).
     */
-  private def dedupedPoints(fromMs: Long = Long.MinValue,
+  private[graft] def dedupedPoints(fromMs: Long = Long.MinValue,
       toMs: Long = Long.MaxValue,
       view: graft.store.HotTier = readView()): Option[DataFrame] =
     mergedDeduped(fromMs, toMs, view).map(applyTtl(_, view))
@@ -1586,15 +1625,31 @@ final class HttpApi(spark: SparkSession,
     * need to show expired-but-registered series too). `view` defaults to
     * read-your-writes across the micro-batch buffer (or the cheapest
     * staleness-budgeted view when the request opted in).
+    *
+    * The spill frontier rule: every cold row has `ts_ms <
+    * view.coldBelow` (spill is the only writer of new cold rows), so a
+    * window starting at or above the frontier plans NO cold scan — the
+    * reference cuts its persistent read at the first in-memory timestamp
+    * the same way (`batch/batch.go:787-861`). A window below it scans
+    * cold bounded by `ts_ms < view.coldBelow`: rows a later fold spills
+    * after this view was taken are still in the view's hot batches, and
+    * the bound keeps them from being read twice.
     */
   private def mergedDeduped(fromMs: Long = Long.MinValue,
       toMs: Long = Long.MaxValue,
       view: graft.store.HotTier = readView()): Option[DataFrame] = {
     // time bounds apply BELOW the dedup aggregate (ts_ms is a grouping
     // key, so this is where the scan-level pruning comes from)
-    def bounded(df: DataFrame): DataFrame =
-      if (fromMs == Long.MinValue && toMs == Long.MaxValue) df
-      else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= toMs)
+    def bounded(df: DataFrame, to: Long): DataFrame =
+      if (fromMs == Long.MinValue && to == Long.MaxValue) df
+      else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= to)
+    // fromMs < coldBelow implies coldBelow > Long.MinValue: no overflow
+    val cold =
+      if (fromMs >= view.coldBelow) None
+      else {
+        val coldTo = math.min(toMs, view.coldBelow - 1)
+        coldPoints(fromMs, coldTo).map(bounded(_, coldTo))
+      }
     // the dedup SHUFFLE is paid only where duplicate keys can exist: a
     // compacted single hot batch is clean, and the cold tier is clean
     // unless a backfill crossed the spill frontier (coldDirty) — for
@@ -1602,8 +1657,7 @@ final class HttpApi(spark: SparkSession,
     def hotDeduped(h: DataFrame): DataFrame =
       if (view.batches.size == 1 && view.headCompacted) h else lwwDedup(h)
     val deduped =
-      (coldPoints(fromMs, toMs).map(bounded),
-        unionAll(view.batches).map(bounded)) match {
+      (cold, unionAll(view.batches).map(bounded(_, toMs))) match {
         case (Some(c), Some(h)) =>
           Some(if (coldDirty) lwwDedup(c.unionByName(h))
           else c.unionByName(hotDeduped(h)))
@@ -1756,6 +1810,14 @@ final class HttpApi(spark: SparkSession,
     */
   def preAggWatermark: Long =
     aggPath.fold(0L)(graft.store.Store.readWatermark)
+
+  /** The agg-table row shape [[aggSlice]] writes, `month` partition
+    * included.
+    */
+  private val AggSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "metric_id BIGINT, bucket_ms BIGINT, min DOUBLE, max DOUBLE, " +
+      "avg DOUBLE, count BIGINT, labels MAP<STRING, STRING>, " +
+      "__ttl_sec BIGINT, month STRING")
 
   /** Downsample a deduped point slice into the agg-table row shape:
     * (metric_id, labels, bucket_ms, min, max, avg, count, __ttl_sec),
@@ -1952,6 +2014,14 @@ final class HttpApi(spark: SparkSession,
     * as `ts_ms` — unioned with the raw tail re-aggregated at query time
     * (`read.go:229-237`), so rates don't jump at the boundary. None when
     * no agg table exists yet (callers fall back to raw).
+    *
+    * The spill cutoff is aligned to the agg resolution, so after a fold
+    * the watermark sits at or above the spill frontier and the raw tail
+    * (a window starting at the watermark) reads the hot tier only — the
+    * routed panel scans parquet once, for `agg_5m`. The frontier rule of
+    * [[mergedDeduped]] decides this per read: a watermark behind the
+    * frontier (a blocked or not-yet-run pre-aggregation) still reads the
+    * cold rows it needs.
     */
   private def routedPoints(fromMs: Long, toMs: Long,
       column: String): Option[DataFrame] = aggPath.flatMap { ap =>
@@ -1960,7 +2030,9 @@ final class HttpApi(spark: SparkSession,
     else {
       val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
         .withZone(java.time.ZoneOffset.UTC)
-      val agg0 = spark.read.parquet(aggDataPath.get)
+      // known schema: inferring it reads a footer, one Spark job per
+      // routed read
+      val agg0 = spark.read.schema(AggSchema).parquet(aggDataPath.get)
       val monthPruned =
         if (fromMs == Long.MinValue || toMs == Long.MaxValue) agg0
         else agg0.where(col("month").between(

@@ -39,6 +39,14 @@ final case class HotBatch(df: DataFrame, minTs: Long, wallMs: Long,
   * @param retiredCur          superseded staged paths of the current full
   *                            generation; delta folds add, never delete,
   *                            so each survives one whole generation
+  * @param coldBelow           the spill frontier: every cold-tier row has
+  *                            `ts_ms < coldBelow` (max spilled ts + 1, a
+  *                            running max; `Long.MinValue` = nothing
+  *                            spilled). Spill is the only writer of new
+  *                            cold rows, so a read whose window starts at
+  *                            or above it needs no cold scan, and a read
+  *                            that does scan cold bounds it here — rows a
+  *                            later fold spills stay out of an older view
   */
 final case class HotTier(
     batches: Vector[HotBatch] = Vector.empty,
@@ -47,7 +55,8 @@ final case class HotTier(
     pinsSinceFullFold: Int = 0,
     pinnedThroughWallMs: Long = Long.MinValue,
     retiredPrev: Vector[String] = Vector.empty,
-    retiredCur: Vector[String] = Vector.empty) {
+    retiredCur: Vector[String] = Vector.empty,
+    coldBelow: Long = Long.MinValue) {
 
   private def headLen: Int = if (headCompacted && batches.nonEmpty) 1 else 0
 
@@ -86,9 +95,13 @@ final case class HotTier(
     * full fold. Returns the new tier and the paths to delete now: the
     * previous generation's retirees. The folded paths (plus `alsoRetired`)
     * join the current generation's and become the previous generation.
+    * `spilledTo` (max spilled ts + 1, `Long.MinValue` when the fold
+    * spilled nothing) raises the spill frontier; a lower value (a
+    * backfill spill) never lowers it.
     */
   def fullFolded(until: Int, df: DataFrame, path: String, minTs: Long,
-      alsoRetired: Seq[String]): (HotTier, Vector[String]) = {
+      alsoRetired: Seq[String],
+      spilledTo: Long = Long.MinValue): (HotTier, Vector[String]) = {
     val folded = batches.take(until)
     val head = HotBatch(df, minTs, folded.map(_.wallMs).max, path)
     val next = copy(batches = head +: batches.drop(until),
@@ -96,7 +109,8 @@ final case class HotTier(
       pinsSinceFullFold = batches.size - until,
       retiredPrev =
         (retiredCur ++ folded.map(_.path) ++ alsoRetired).filter(_.nonEmpty),
-      retiredCur = Vector.empty)
+      retiredCur = Vector.empty,
+      coldBelow = math.max(coldBelow, spilledTo))
     (next, retiredPrev)
   }
 

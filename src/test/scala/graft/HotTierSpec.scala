@@ -134,4 +134,27 @@ class HotTierSpec extends SparkSpec {
       1000L, Nil)
     assert(drop3 === Vector("r2", "r3", "h1", "m"))
   }
+
+  test("the spill frontier rises with full folds, never falls, and " +
+    "rides every view") {
+    val t0 = tier(batch(0), batch(1))
+    assert(t0.coldBelow === Long.MinValue, "nothing spilled yet")
+    // a fold that spilled nothing leaves the frontier where it was
+    val (quiet, _) = t0.fullFolded(2, spark.range(1).toDF(), "", 1000L, Nil)
+    assert(quiet.coldBelow === Long.MinValue)
+    val (g1, _) = quiet.appended(batch(2))
+      .fullFolded(2, spark.range(1).toDF(), "", 1000L, Nil,
+        spilledTo = 5000L)
+    assert(g1.coldBelow === 5000L)
+    // a backfill spill below the frontier does not lower it
+    val (g2, _) = g1.appended(batch(3))
+      .fullFolded(2, spark.range(1).toDF(), "", 1000L, Nil,
+        spilledTo = 3000L)
+    assert(g2.coldBelow === 5000L)
+    // appends, delta folds and bounded-staleness prefixes keep it
+    val t = g2.appended(batch(4)).appended(batch(5))
+      .deltaFolded(3, spark.range(1).toDF(), "")
+    assert(t.coldBelow === 5000L)
+    assert(t.covering(Long.MinValue).map(_.coldBelow) === Some(5000L))
+  }
 }

@@ -708,6 +708,172 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(plan.contains("PushedFilters") &&
       plan.replaceAll("\\s+", " ").contains("GreaterThanOrEqual(ts_ms"),
       plan)
+    // the spill frontier: every sample spilled, so cold holds ts < T9 + 1.
+    // A window starting one below it still scans cold (day-pruned); a
+    // window starting at it plans no cold scan. A recent sample keeps the
+    // hot tier non-empty so both reads have a plan.
+    val frontier = api5.hotTier.coldBelow
+    assert(frontier === T9 + 1)
+    val now = System.currentTimeMillis()
+    api5.write(Seq(PromSeries(Map("__name__" -> "pm", "instance" -> "b"),
+      Seq((now, 2.0)))), "default")
+    def framePlan(from: Long): String = api5.readSeriesFrame(
+      Prompb.ReadQuery(from, now, Seq(MatchEq("__name__", "pm")))).get
+      .queryExecution.executedPlan.toString
+    val below = framePlan(frontier - 1)
+    assert(below.contains("FileScan") && below.contains("PartitionFilters") &&
+      below.contains("day"), below)
+    val at = framePlan(frontier)
+    assert(!at.contains("FileScan"), at)
+    assert(!api5.source("default", frontier, now).get.points
+      .queryExecution.executedPlan.toString.contains("FileScan"))
+  }
+
+  test("spill frontier: the routed 12 h panel scans parquet once and " +
+    "starts no job at compile; windows across the frontier read exactly " +
+    "the stored samples") {
+    import graft.api.QueryService
+    import graft.promql.{EvalParams, Parser}
+    val dir = java.nio.file.Files.createTempDirectory("graft_frontier")
+      .resolve("cold").toString
+    val apiF = new HttpApi(spark, durablePath = Some(dir))
+    try {
+      // 12 h of 1-min samples ending now: the fold spills what is older
+      // than the 2 h hot horizon and pre-aggregates it
+      val end = System.currentTimeMillis() / 60000L * 60000L
+      val h12 = 12 * 3600000L
+      def samples(inst: String) = (0 to 720).map(i =>
+        (end - h12 + i * 60000L, (if (inst == "a") 1.0 else 100.0) + i))
+      val stored = scala.collection.mutable.Map(
+        Seq("a", "b").map(inst => inst -> samples(inst)): _*)
+      apiF.write(stored.toSeq.map { case (inst, ss) =>
+        PromSeries(Map("__name__" -> "fm", "instance" -> inst), ss) },
+        "default")
+      apiF.compact()
+      val frontier = apiF.hotTier.coldBelow
+      assert(frontier > end - h12 && frontier < end, "the fold spilled")
+      // the cutoff is aligned to the agg resolution, so the watermark
+      // covers everything spilled
+      assert(apiF.preAggWatermark >= frontier)
+
+      // routed 12 h panel: one parquet scan (agg_5m), a hot-only raw
+      // tail, and no Spark job while the source is built and compiled
+      val ast = Parser.parse("avg_over_time(fm[10m])")
+      val p = EvalParams(end - h12, end, 600000L, 300000L)
+      val (mint, maxt) = QueryService.timeBounds(ast, p)
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val marker = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(e.properties)
+            .flatMap(ps => Option(ps.getProperty("spark.jobGroup.id")))
+            .getOrElse("")
+          if (g == "frontier-marker") marker.countDown() else jobs.add(g)
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val df = try {
+        spark.sparkContext.setJobGroup("frontier-compile", "compile")
+        val src = apiF.querySource("default", mint, maxt, allowRoute = true)
+          .get
+        val compiled = QueryService.queryRange(ast, src, p)
+        // the listener bus is FIFO: once the marker job is seen, every
+        // job the compile started has been seen too
+        spark.sparkContext.setJobGroup("frontier-marker", "marker")
+        spark.range(1).count()
+        assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        compiled
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(!jobs.contains("frontier-compile"),
+        "building and compiling the routed panel started a Spark job")
+      val plan = df.queryExecution.executedPlan.toString
+      assert("FileScan parquet".r.findAllMatchIn(plan).size === 1, plan)
+      assert(plan.contains("_agg5m"), plan)
+      assert(df.select("instance").distinct().count() === 2)
+
+      // late samples AT the frontier and one past it land hot
+      val late = Seq(frontier -> 7.0, (frontier + 1) -> 8.0)
+      apiF.write(Seq(PromSeries(Map("__name__" -> "fm", "instance" -> "a"),
+        late)), "default")
+      stored("a") = stored("a") ++ late
+      Seq(frontier - 1, frontier, frontier + 1).foreach { from =>
+        val got = apiF.readSeriesFrame(Prompb.ReadQuery(from, end,
+          Seq(MatchEq("__name__", "fm")))).get.collect().toSeq.flatMap { r =>
+          val inst = r.getAs[Map[String, String]]("labels")("instance")
+          r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("samples")
+            .map(x => (inst, x.getLong(0), x.getDouble(1)))
+        }
+        val want = stored.toSeq.flatMap { case (inst, ss) =>
+          ss.collect { case (t, v) if t >= from && t <= end => (inst, t, v) } }
+        assert(got.sorted === want.sorted, s"window from $from")
+      }
+      // the window one below the frontier does include a cold sample
+      assert(stored("a").exists(_._1 == frontier - 1))
+    } finally apiF.stop()
+  }
+
+  test("spill-before-swap: a read planned from a view taken before a " +
+    "full fold reads every sample once after the spill and swap") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_swaprace")
+      .resolve("cold").toString
+    val apiS = new HttpApi(spark, deltaFoldEvery = 0,
+      durablePath = Some(dir))
+    try {
+      def rs(from: Int, until: Int) = PromSeries(
+        Map("__name__" -> "rm", "instance" -> "a"),
+        (from until until).map(i => (T0 + i * 60000L, i.toDouble)))
+      apiS.write(Seq(rs(0, 10)), "default")
+      apiS.compact()
+      assert(apiS.hotTier.coldBelow === T9 + 1)
+      // later history past the frontier, old enough to spill next fold
+      apiS.write(Seq(rs(10, 20)), "default")
+      apiS.drainFlushes()
+      val view = apiS.hotTier
+      val planned = apiS.dedupedPoints(Long.MinValue, Long.MaxValue, view).get
+      apiS.compact() // spills rs(10, 20) into cold, then swaps
+      assert(apiS.hotTier.coldBelow === T0 + 19 * 60000L + 1)
+      val ts = planned.where(col("labels")("__name__") === "rm")
+        .select("ts_ms").collect().map(_.getLong(0)).sorted.toSeq
+      assert(ts === (0 until 20).map(T0 + _ * 60000L))
+    } finally apiS.stop()
+  }
+
+  test("restart restores the spill frontier: after compactCold, a " +
+    "rewritten spilled key reads back once with its new value") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_frontier_rs")
+      .resolve("cold").toString
+    val api1 = new HttpApi(spark, durablePath = Some(dir))
+    api1.write(Seq(series("sk", "a", i => 1.0 + i)), "default")
+    api1.compact()
+    api1.stop()
+    val api2 = new HttpApi(spark, durablePath = Some(dir))
+    try {
+      assert(api2.hotTier.coldBelow === T9 + 1)
+      api2.compactCold()
+      api2.write(Seq(PromSeries(
+        Map("__name__" -> "sk", "instance" -> "a", "job" -> "node"),
+        Seq((T0, 42.0)))), "default")
+      api2.compact() // spills the rewrite next to the original
+      val pts = api2.source().get.points.where(col("__name__") === "sk")
+      assert(pts.count() === 10)
+      assert(pts.where(col("ts_ms") === T0).select("value").collect()
+        .map(_.getDouble(0)).toSeq === Seq(42.0))
+    } finally api2.stop()
+    // a sidecar written before the frontier was persisted: bootstrap
+    // derives it from the cold tier once
+    val meta = java.nio.file.Paths.get(dir + "_meta.json")
+    java.nio.file.Files.writeString(meta, java.nio.file.Files.readString(meta)
+      .replaceAll("\"coldBelow\":-?\\d+,", ""))
+    assert(!java.nio.file.Files.readString(meta).contains("coldBelow"))
+    val api3 = new HttpApi(spark, durablePath = Some(dir))
+    try assert(api3.hotTier.coldBelow === T9 + 1)
+    finally api3.stop()
   }
 
   test("randomized write → remote-read round-trip, both response forms, " +
